@@ -164,9 +164,8 @@ def _save_as_cache_table(
     spark = df.sparkSession
     ensure_cache_database(spark)
     if not _table_exists(spark, table):
-        location = _table_location(spark, hash_name)
-        if fs.exists(location):
-            fs.remove(location)
+        fs.remove(_table_location(spark, hash_name))
+
     def build_writer(fmt: str):
         writer = df.write.mode("overwrite")
         if fmt:
@@ -216,121 +215,95 @@ def _marks_success_jobs(spark: SparkSession) -> bool:
         return True
 
 
-# Sidecar recording the WRITER session's committer marker discipline
-# (ADVICE r15 #4): _SUCCESS presence is a property of the session that
-# WROTE a cache directory, not of the one reading it. Gating the torn-
-# write guard on the READER's conf is wrong in both mixed quadrants — a
-# marksuccessfuljobs=false reader skipped the guard for marker-written
-# dirs (reopening the cross-process partial-read window), and a
-# marker-writing reader required _SUCCESS from markerless-written dirs
-# (one full rewrite per session instead of a hit). The writer records its
-# discipline next to the metadata sidecar at write time; readers prefer
-# the recorded value and fall back to their own conf for pre-recording
-# entries (the old behavior, both asymmetries documented above).
-_COMMITTER_SIDECAR = "writer_committer.txt"
-
-
-def _default_sidecar_dir(hash_name: str) -> str:
-    """Where an entry's sidecars live under the DEFAULT cache base. Write
-    paths derive sidecar locations from the entry's actual metadata path
-    (which honors a custom ``cache_path``); read probes that know that
-    path pass its directory along (r17 — ADVICE r16 #4 closed the
-    write-beside-custom-base / read-from-default-base asymmetry that left
-    both r15/r16 guards silently inactive for custom-path entries)."""
-    base = config.SPARK_CACHE_DIR
-    if not base.endswith("/"):
-        base += "/"
-    return f"{base}{hash_name}"
-
-
-def _committer_sidecar_path(
-    hash_name: str, sidecar_dir: Optional[str] = None
-) -> str:
-    base = (sidecar_dir or _default_sidecar_dir(hash_name)).rstrip("/")
-    return f"{base}/{_COMMITTER_SIDECAR}"
-
-
-def _record_writer_committer(spark: SparkSession, metadata_path: str) -> None:
-    """Record this (writer) session's marker discipline beside the entry's
-    metadata sidecar. Advisory: a failure degrades readers to their own
-    conf (the pre-recording behavior), so it must never fail the write."""
-    sidecar = f"{metadata_path.rsplit('/', 1)[0]}/{_COMMITTER_SIDECAR}"
-    flag = "true" if _marks_success_jobs(spark) else "false"
-    try:
-        fs.write_text(sidecar, f"marks_success_jobs={flag}")
-    except Exception as exc:
-        log.warning(
-            "Could not record writer committer discipline at %s (%s); "
-            "readers will gate the _SUCCESS guard on their own conf",
-            sidecar, exc_summary(exc),
-        )
-
-
-# Data-file inventory recorded at write time (r16 corrupt-committed-data
-# lens): parquet corruption that destroys a footer fails reads LOUDLY,
-# but a part file deleted AFTER commit (partial restore, copy-tool loss,
-# bit-rot quarantine) leaves a directory that scans cleanly and silently
-# serves FEWER rows as a valid hit — the worst read-side failure mode.
-# The writer records how many data files (and bytes) the committed entry
-# holds; readers refuse to serve an entry whose live listing disagrees
-# (miss -> recompute heals and re-records). Transactional formats skip
-# both halves — their commit log is the inventory.
+# The commit record: one file beside the metadata document, written after
+# the table commits and before the metadata makes the entry visible. It
+# holds the data-file inventory the writer listed (``files=``/``bytes=``)
+# and whether that listing held Spark's ``_SUCCESS`` job-commit marker.
+# Readers refuse an entry whose live listing contradicts either: a part
+# file lost after commit scans cleanly with fewer rows, and a missing
+# marker is what another process sees mid-rewrite (the overwrite is
+# remove-then-rewrite and the key lock only serializes this driver). The
+# marker is recorded rather than assumed because committers configured
+# with marksuccessfuljobs=false (common on S3A) never write one.
 _INVENTORY_SIDECAR = "data_inventory.txt"
+_MARKER_KEY = "success_marker"
 
-
-def _record_data_inventory(
-    spark: SparkSession, hash_name: str, metadata_path: str
-) -> None:
-    """Record the committed entry's data-file inventory beside its
-    metadata sidecar. Advisory like the committer record: on failure,
-    readers simply skip the inventory check for this entry."""
-    sidecar = f"{metadata_path.rsplit('/', 1)[0]}/{_INVENTORY_SIDECAR}"
-    try:
-        location = _table_location(spark, hash_name)
-        if fs.exists(f"{location.rstrip('/')}/_delta_log"):
-            return  # transactional: the commit log validates itself
-        fs.write_text(
-            sidecar, fs.render_inventory(*fs.data_file_inventory(location))
-        )
-    except Exception as exc:
-        log.warning(
-            "Could not record data inventory at %s (%s); the corrupt-"
-            "entry guard will not cover this entry", sidecar,
-            exc_summary(exc),
-        )
+# Entry states decided by _probe_entry; only the last two are served.
+GONE = "gone"                  # no table location
+CORRUPT = "corrupt"            # data files differ from the commit record
+UNCOMMITTED = "uncommitted"    # expected _SUCCESS marker absent
+TRANSACTIONAL = "transactional"  # _delta_log: the format's log is the record
+SERVABLE = "servable"
 
 
 def _inventory_sidecar_path(
     hash_name: str, sidecar_dir: Optional[str] = None
 ) -> str:
-    base = (sidecar_dir or _default_sidecar_dir(hash_name)).rstrip("/")
-    return f"{base}/{_INVENTORY_SIDECAR}"
+    """The commit record's path, beside the entry's metadata document:
+    ``sidecar_dir`` when the caller resolved a custom ``cache_path``,
+    else the entry's directory under the default cache base."""
+    base = sidecar_dir or f"{config.SPARK_CACHE_DIR.rstrip('/')}/{hash_name}"
+    return f"{base.rstrip('/')}/{_INVENTORY_SIDECAR}"
 
 
-# Shared "corrupt committed data" definition (read path + management
-# scans): see fs.inventory_matches.
-check_data_inventory = fs.inventory_matches
+def _recorded_marker(record: Optional[str]) -> Optional[bool]:
+    """The record's ``success_marker`` line; None when it has none (records
+    and entries written before the line existed)."""
+    for line in (record or "").splitlines():
+        key, _, val = line.strip().partition("=")
+        if key == _MARKER_KEY:
+            return val.strip().lower() == "true"
+    return None
 
 
-def _writer_marks_success(
+def _commit_entry(
+    df: DataFrame,
+    hash_name: str,
+    metadata_path: str,
+    metadata_txt: str,
+    **layout: Any,
+) -> None:
+    """Write one cache entry: the table, then its commit record from one
+    listing of the committed location, then the metadata document that
+    makes the entry visible to probes."""
+    spark = df.sparkSession
+    _save_as_cache_table(df, table_name_for_hash(hash_name), hash_name, **layout)
+    listing = fs.entry_listing(_table_location(spark, hash_name))
+    marker = "true" if "_SUCCESS" in listing.root_names else "false"
+    fs.write_text(
+        _inventory_sidecar_path(hash_name, metadata_path.rsplit("/", 1)[0]),
+        f"{fs.render_inventory(listing.files, listing.data_bytes)}\n"
+        f"{_MARKER_KEY}={marker}",
+    )
+    fs.write_text(metadata_path, metadata_txt)
+
+
+def _probe_entry(
     spark: SparkSession, hash_name: str, sidecar_dir: Optional[str] = None
-) -> bool:
-    """Marker discipline governing ``hash_name``'s cache directory: the
-    recorded WRITER value when present, else this reader's own conf
-    (pre-recording entries only). ``sidecar_dir`` is the entry's actual
-    sidecar directory — readers that resolved a custom ``cache_path``
-    metadata path pass its directory so custom-base entries read the
-    very sidecars their writer recorded (r17; previously this probe
-    looked only under SPARK_CACHE_DIR and both write-discipline and
-    inventory guards were silently inactive for custom-path entries)."""
-    recorded = fs.read_text(_committer_sidecar_path(hash_name, sidecar_dir))
-    if recorded is not None:
-        val = recorded.strip().lower().rsplit("=", 1)[-1]
-        if val == "true":
-            return True
-        if val == "false":
-            return False
-    return _marks_success_jobs(spark)
+) -> Tuple[str, fs.EntryListing]:
+    """Classify a cache entry from its commit record and ONE recursive
+    listing of its table location; returns (state, listing).
+
+    An entry whose record has no marker line falls back to this reader's
+    committer conf: such entries predate the line, and their writer's
+    discipline is unknown."""
+    location = _table_location(spark, hash_name)
+    listing = fs.entry_listing(location)
+    # Only an empty listing is ambiguous between "empty" and "missing".
+    if not listing.root_names and not fs.exists(location):
+        return GONE, listing
+    if "_delta_log" in listing.root_names:
+        return TRANSACTIONAL, listing
+    record = fs.read_text(_inventory_sidecar_path(hash_name, sidecar_dir))
+    recorded = fs.parse_inventory(record)
+    if recorded is not None and recorded != (listing.files, listing.data_bytes):
+        return CORRUPT, listing
+    marker = _recorded_marker(record)
+    if marker is None:
+        marker = _marks_success_jobs(spark)
+    if marker and "_SUCCESS" not in listing.root_names:
+        return UNCOMMITTED, listing
+    return SERVABLE, listing
 
 
 def _read_cache_table(
@@ -338,49 +311,36 @@ def _read_cache_table(
     hash_name: str,
     sidecar_dir: Optional[str] = None,
 ) -> Optional[DataFrame]:
-    """Read a cache entry via the catalog, falling back to its files.
+    """Read a cache entry via the catalog, falling back to its files;
+    None unless :func:`_probe_entry` finds it servable or transactional.
 
     The path fallback is what makes caches survive session restarts on
     catalogs without persistence (local in-memory catalog); on a shared
-    metastore the catalog branch always wins.
-
-    ``sidecar_dir``: the directory holding this entry's metadata/committer/
-    inventory sidecars, when the caller resolved it (a custom ``cache_path``
-    base relocates them); ``None`` probes the default SPARK_CACHE_DIR
-    layout, which is also where ``create_cached_dataframe`` entries and the
-    management scans live.
+    metastore the catalog branch always wins. Both branches obey the same
+    probe, so a scan is only ever built over a committed, complete
+    directory. ``sidecar_dir``: the entry's sidecar directory when the
+    caller resolved a custom ``cache_path``; None = the default layout.
     """
-    table = table_name_for_hash(hash_name)
-    # Corrupt-committed-data guard (r16): an entry whose live data-file
-    # listing disagrees with the writer-recorded inventory has lost (or
-    # grown) part files AFTER commit — serving it would return partial
-    # rows as a valid hit through EITHER branch (a parquet scan of a
-    # directory missing files succeeds silently). Refuse and let the
-    # caller recompute; the rewrite re-records a fresh inventory. One
-    # driver-side recursive listing per hit, only for entries carrying a
-    # record — the same cost class as the input-mtime fingerprint scan.
     try:
-        recorded = fs.read_text(_inventory_sidecar_path(hash_name, sidecar_dir))
-        inv_location = _table_location(spark, hash_name)
-        if (
-            recorded is not None
-            and fs.exists(inv_location)
-            and not fs.exists(f"{inv_location.rstrip('/')}/_delta_log")
-            and check_data_inventory(inv_location, recorded) is False
-        ):
-            log.warning(
-                "Cache entry %s fails its data-file inventory (recorded "
-                "%r; part files lost or altered after commit — partial "
-                "restore / copy truncation?); treating as a miss",
-                hash_name, recorded.replace("\n", " "),
-            )
-            return None
+        state, _ = _probe_entry(spark, hash_name, sidecar_dir)
     except Exception as exc:
-        # The guard is best-effort: a listing failure must not turn a
-        # readable cache into a crash. (Absence of the record already
-        # skips the check; this covers transient listing errors.)
-        log.warning("Inventory check failed for %s (%s); proceeding",
+        log.warning("Probe of cache entry %s failed (%s); treating as a miss",
                     hash_name, exc_summary(exc))
+        return None
+    if state == CORRUPT:
+        log.warning(
+            "Cache entry %s fails its data-file inventory (part files lost "
+            "or altered after commit); treating as a miss", hash_name,
+        )
+    elif state == UNCOMMITTED:
+        log.warning(
+            "Cache entry %s has no _SUCCESS job-commit marker (concurrent "
+            "rewrite in another process, or an uncommitted directory); "
+            "treating as a miss", hash_name,
+        )
+    if state not in (SERVABLE, TRANSACTIONAL):
+        return None
+    table = table_name_for_hash(hash_name)
     if _table_exists(spark, table):
         try:
             return spark.read.table(table)
@@ -389,58 +349,20 @@ def _read_cache_table(
             # as a miss / try the files rather than crash the safe wrapper.
             log.warning("Catalog read failed for %s (%s); trying files",
                         table, exc_summary(exc))
+    # The files may have been written by the configured format OR by the
+    # parquet degradation path of a previous session — try both. A
+    # transactional directory is never read as raw parquet: superseded
+    # file versions would surface as duplicated or stale rows.
     location = _table_location(spark, hash_name)
-    if fs.exists(location):
-        # The files may have been written by the configured format OR by the
-        # parquet degradation path of a previous session — try both. BUT a
-        # transactional-format directory (_delta_log present) must never be
-        # read as raw parquet: superseded file versions would surface as
-        # duplicated/stale rows presented as a valid hit.
-        is_transactional = fs.exists(f"{location.rstrip('/')}/_delta_log")
-        # Cross-process torn-write guard (r14 follow-on to the in-process
-        # probe lock): _save_as_cache_table's overwrite is remove-then-
-        # rewrite, and _lock_for_key only serializes THIS driver — another
-        # process path-reading mid-rewrite would load a half-written
-        # directory and serve partial rows as a valid hit. Spark's job
-        # committer lands _SUCCESS last, so for non-transactional formats
-        # its absence means "no committed write here" — report a clean
-        # miss (recompute), never partial data. Transactional formats
-        # carry their own commit log and skip this check.
-        # The check only applies when the committer that WROTE this entry
-        # marks success jobs (ADVICE r14 #3 + r15 #4): with mapreduce.
-        # fileoutputcommitter.marksuccessfuljobs=false (common on
-        # S3A/magic-committer platforms) no valid cache ever carries
-        # _SUCCESS, and requiring it would permanently disable the path
-        # fallback — one full distributed rewrite per session instead of
-        # a free hit. Marker-writing discipline is the WRITER's property,
-        # recorded per-entry at write time (_writer_marks_success falls
-        # back to this reader's conf for pre-recording entries).
-        # Markerless-written entries keep the catalog read and accept the
-        # narrower cross-process window the marker would have closed (use
-        # a transactional CACHE_FORMAT for full protection there).
-        if (
-            not is_transactional
-            and _writer_marks_success(spark, hash_name, sidecar_dir)
-            and not fs.exists(f"{location.rstrip('/')}/_SUCCESS")
-        ):
-            log.warning(
-                "Cache location %s exists but has no _SUCCESS job-commit "
-                "marker (concurrent rewrite in another process, or an "
-                "uncommitted/foreign directory); treating as a miss",
-                location,
-            )
-            return None
-        formats = [_effective_cache_format() or "parquet"]
-        if "parquet" not in formats and not is_transactional:
-            formats.append("parquet")
-        for fmt in formats:
-            if fmt == "parquet" and is_transactional:
-                continue
-            try:
-                return spark.read.format(fmt).load(location)
-            except Exception as exc:
-                log.warning("Path read (%s) failed for %s: %s", fmt, location,
-                            exc_summary(exc))
+    formats = [_effective_cache_format() or "parquet", "parquet"]
+    if state == TRANSACTIONAL:
+        formats = [f for f in formats if f != "parquet"]
+    for fmt in dict.fromkeys(formats):
+        try:
+            return spark.read.format(fmt).load(location)
+        except Exception as exc:
+            log.warning("Path read (%s) failed for %s: %s", fmt, location,
+                        exc_summary(exc))
     return None
 
 
@@ -457,9 +379,7 @@ def read_cache_if_exist(
     (reference: core_caching.py:409-471). ``hash_name``/``cache_path``
     must mirror whatever the write used — a custom-keyed cache
     (``cacheToStorage(hash_name=...)``) is invisible to a default-keyed
-    probe, which previously sent every such call down the miss path
-    (re-materializing or landing in the Spark-cache tier) even though
-    the table existed.
+    probe.
     """
     spark = df.sparkSession
     plan = query_plan if query_plan is not None else canonical_plan(df)
@@ -468,19 +388,13 @@ def read_cache_if_exist(
     key, _, metadata_path, metadata_txt = table_cache_info(
         info, plan, hash_name=hash_name, cache_path_base=cache_path
     )
-    # The probe runs UNDER the key's write lock (r14 fresh-eyes review):
-    # writers hold it across saveAsTable + sidecar write, and a custom-
-    # keyed REWRITE ("metadata changed; rewriting") overwrites the table
-    # location non-atomically — an unserialized probe could read the old
-    # sidecar, find the catalog entry mid-overwrite, and fall to the PATH
-    # read of a half-written directory: partial part-files served as a
-    # valid hit (silent wrong data, the worst class). Eviction
-    # (management.clear_cache_for_hash) takes the same lock, so a probe
-    # now sees each entry either fully live or fully gone, never
-    # mid-drop. The lock covers only sidecar read + scan CONSTRUCTION
-    # (driver metadata work, no Spark job); plan/mtime fingerprinting
-    # stays outside it. Same Spark driver only — cross-process races
-    # need a transactional CACHE_FORMAT, as the write-lock note says.
+    # The probe runs under the key's write lock, which writers hold across
+    # the whole commit and eviction (management.clear_cache_for_hash) takes
+    # too: a probe sees each entry either fully live or fully gone, never
+    # mid-overwrite or mid-drop. The lock covers only sidecar reads and
+    # scan construction (driver metadata work, no Spark job); plan/mtime
+    # fingerprinting stays outside it. Same Spark driver only — the
+    # commit record and marker rule cover other processes.
     with _lock_for_key(key):
         # A CUSTOM hash_name pins the metadata path, so a hit must require
         # the stored document to EQUAL the current one — existence alone
@@ -499,7 +413,7 @@ def read_cache_if_exist(
             spark, key, sidecar_dir=metadata_path.rsplit("/", 1)[0]
         )
     if cached is None:
-        log.warning("Cache metadata exists but table %s is missing", key)
+        log.warning("Cache metadata exists but table %s is not servable", key)
     return cached
 
 
@@ -547,10 +461,12 @@ def write_cache(
         # winner's (identical, content-addressed) metadata and skips the
         # duplicate distributed write entirely.
         existing = fs.read_text(metadata_path)
-        sidecar_dir = metadata_path.rsplit("/", 1)[0]
-        if existing == metadata_txt and (
-            _read_cache_table(spark, key, sidecar_dir=sidecar_dir) is not None
-        ):
+        cached = None
+        if existing == metadata_txt:
+            cached = _read_cache_table(
+                spark, key, sidecar_dir=metadata_path.rsplit("/", 1)[0]
+            )
+        if cached is not None:
             log.info("Cache %s already current; skipping write", key)
             if partition_by or bucket_by:
                 # Layout is not part of the identity: an existing entry is
@@ -565,29 +481,22 @@ def write_cache(
         else:
             if existing is not None and existing != metadata_txt:
                 log.info("Cache %s metadata changed; rewriting", key)
-            _save_as_cache_table(
-                df,
-                table,
-                key,
-                partition_by=partition_by,
-                bucket_by=bucket_by,
-                n_buckets=n_buckets,
-                bucket_sort_by=bucket_sort_by,
+            _commit_entry(
+                df, key, metadata_path, metadata_txt,
+                partition_by=partition_by, bucket_by=bucket_by,
+                n_buckets=n_buckets, bucket_sort_by=bucket_sort_by,
             )
-            _record_writer_committer(spark, metadata_path)
-            _record_data_inventory(spark, key, metadata_path)
-            fs.write_text(metadata_path, metadata_txt)
             _bump("writes")
-
-    if replace:
-        cached = _read_cache_table(
-            spark, key, sidecar_dir=metadata_path.rsplit("/", 1)[0]
-        )
-        if cached is not None:
-            return cached
-        log.error("Could not read back cache table %s", table)
-        return df
-    return df
+            if replace:
+                # Built under the lock: an eviction between the commit and
+                # Spark's file listing would otherwise leave a scan of an
+                # empty root — zero rows and no error.
+                try:
+                    cached = spark.read.table(table)
+                except Exception as exc:
+                    log.error("Could not read back cache table %s (%s)",
+                              table, exc_summary(exc))
+    return cached if replace and cached is not None else df
 
 
 def _table_exists(spark: SparkSession, table: str) -> bool:
@@ -767,15 +676,14 @@ def create_cached_dataframe(
     metadata_path = f"{cache_dir}cache_metadata.txt"
 
     with _lock_for_key(cache_hash_name):
-        cached = _read_cache_table(spark, cache_hash_name)
-        if cached is not None and fs.read_text(metadata_path) is not None:
+        cached = None
+        if fs.read_text(metadata_path) is not None:
+            cached = _read_cache_table(spark, cache_hash_name)
+        if cached is not None:
             log.info("Direct-data cache hit: %s", table)
         else:
             log.info("Direct-data cache miss; creating %s", table)
             source = spark.createDataFrame(data, schema=schema, **kwargs)
-            _save_as_cache_table(source, table, cache_hash_name)
-            _record_writer_committer(spark, metadata_path)
-            _record_data_inventory(spark, cache_hash_name, metadata_path)
             # Deterministic document — NO wall-clock line: every racer on
             # this key must produce byte-identical content, because both
             # the per-key lock's re-probe and fs.write_text's lost-rename
@@ -787,7 +695,7 @@ def create_cached_dataframe(
                 f"DATA HASH: {data_hash}\n"
                 f"SCHEMA: {source.schema.simpleString()}"
             )
-            fs.write_text(metadata_path, metadata_txt)
+            _commit_entry(source, cache_hash_name, metadata_path, metadata_txt)
             cached = spark.read.table(table)
 
     assert cached is not None

@@ -17,7 +17,7 @@ import os
 import shutil
 from dataclasses import dataclass
 from datetime import datetime
-from typing import List, Optional
+from typing import List, NamedTuple, Optional
 
 
 @dataclass
@@ -95,8 +95,7 @@ def list_dir(path: str) -> List[FileStat]:
                     # PermissionError (or any other OSError) here would
                     # silently drop a real entry from registry scans and
                     # tree_size, so size-budget eviction would undercount
-                    # the footprint — that must fail loudly instead
-                    # (ADVICE r10 #3).
+                    # the footprint — that must fail loudly instead.
                     continue
                 out.append(FileStat(entry.path, entry.name, st.st_size,
                                     int(st.st_mtime * 1000), is_dir))
@@ -108,7 +107,7 @@ def list_dir(path: str) -> List[FileStat]:
     # storage (local tests never hit this branch). Catch rather than probe:
     # an exists() pre-check would double the metadata RPCs on every listing
     # (list_dir runs once per micro-batch in _ledger_state and recursively
-    # under tree_size) to save nothing the catch doesn't already handle.
+    # under entry_listing) to save nothing the catch doesn't already handle.
     out = []
     try:
         statuses = jfs.listStatus(jpath)
@@ -140,39 +139,47 @@ def file_size(path: str) -> Optional[int]:
 def tree_size(path: str) -> int:
     """Total bytes of every file under ``path``, recursing into
     subdirectories (partitioned/bucketed cache tables nest their data
-    files; a shallow listing under-reports them). Built on
-    :func:`list_dir`, so it works on local and Hadoop-scheme paths alike.
-    """
-    total = 0
-    stack = [path]
-    while stack:
-        for stat in list_dir(stack.pop()):
-            if stat.is_dir:
-                stack.append(stat.path)
-            else:
-                total += stat.size
-    return total
+    files; a shallow listing under-reports them)."""
+    return entry_listing(path).total_bytes
+
+
+class EntryListing(NamedTuple):
+    """What one recursive walk of a table directory found."""
+
+    files: int            # data files; hidden ``_``/``.`` entries excluded
+    data_bytes: int
+    total_bytes: int      # every file, bookkeeping included
+    root_names: frozenset  # names directly under the root (commit markers)
+
+
+def entry_listing(path: str) -> EntryListing:
+    """Walk ``path`` once with :func:`list_dir` (local and Hadoop-scheme
+    paths alike; a missing path lists as empty). Hidden entries
+    (``_SUCCESS``, ``.crc`` files, ``_delta_log``, ``_temporary``) are
+    bookkeeping, not data, so the data inventory is stable across
+    committers and changes only when data files are lost, truncated or
+    altered."""
+    files = data_bytes = total = 0
+    root = list_dir(path)
+    pending = [(stat, True) for stat in root]
+    while pending:
+        stat, in_data = pending.pop()
+        is_data = in_data and not stat.name.startswith(("_", "."))
+        if stat.is_dir:
+            pending.extend((child, is_data) for child in list_dir(stat.path))
+        else:
+            total += stat.size
+            if is_data:
+                files += 1
+                data_bytes += stat.size
+    return EntryListing(
+        files, data_bytes, total, frozenset(stat.name for stat in root)
+    )
 
 
 def data_file_inventory(path: str) -> tuple:
-    """(file_count, total_bytes) of the DATA files under ``path``,
-    recursing into partition/bucket subdirectories. Hidden entries
-    (``_SUCCESS``, ``.crc`` sidecars, ``_delta_log``, commit markers)
-    are bookkeeping, not data, and are excluded — so the inventory is
-    stable across committer/marker differences and changes only when
-    data files are lost, truncated, or altered."""
-    files, total = 0, 0
-    stack = [path]
-    while stack:
-        for stat in list_dir(stack.pop()):
-            if stat.name.startswith(("_", ".")):
-                continue
-            if stat.is_dir:
-                stack.append(stat.path)
-            else:
-                files += 1
-                total += stat.size
-    return files, total
+    """(file_count, total_bytes) of the data files under ``path``."""
+    return entry_listing(path)[:2]
 
 
 def render_inventory(files: int, total: int) -> str:
@@ -305,9 +312,9 @@ def write_text(path: str, content: str) -> None:
     must be deleted first the transient state is *absence* (a clean cache
     miss for readers), never a torn read.
 
-    Contract (r17 fresh-eyes): ``path`` must carry a directory component —
-    a bare relative filename ("sidecar.txt") raises ``FileNotFoundError``
-    from ``os.makedirs("")`` rather than guessing a working directory.
+    Contract: ``path`` must carry a directory component — a bare
+    relative filename ("sidecar.txt") raises ``FileNotFoundError`` from
+    ``os.makedirs("")`` rather than guessing a working directory.
     Every internal caller builds paths from a configured base; loud beats
     a sidecar quietly landing in whatever CWD the driver happens to have.
     """
@@ -368,14 +375,14 @@ def rename(src: str, dst: str) -> None:
     ``dst`` must not exist (Hadoop rename does not overwrite; the local
     branch matches that contract for cross-platform parity).
 
-    The local no-overwrite check is best-effort, not a lock (r17
-    fresh-eyes): a ``dst`` created between the ``exists`` probe and
-    ``os.rename`` can still be replaced (POSIX rename overwrites a file
-    target; a directory renames over an empty directory target). The
-    maintenance flows that call this are single-owner by contract — the
-    fold's uuid temp sibling and ``_FOLDED_OK`` stamp guard the racing-
-    owner aftermath — so the probe's job is only to fail FAST on a
-    clearly-stale target, not to arbitrate concurrent writers."""
+    The local no-overwrite check is best-effort, not a lock: a ``dst``
+    created between the ``exists`` probe and ``os.rename`` can still be
+    replaced (POSIX rename overwrites a file target; a directory renames
+    over an empty directory target). The maintenance flows that call this
+    are single-owner by contract — the fold's uuid temp sibling and
+    ``_FOLDED_OK`` stamp guard the racing-owner aftermath — so the probe's
+    job is only to fail FAST on a clearly-stale target, not to arbitrate
+    concurrent writers."""
     if is_local(src) and is_local(dst):
         lsrc, ldst = strip_scheme(src), strip_scheme(dst)
         if os.path.exists(ldst):

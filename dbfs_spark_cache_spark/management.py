@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import logging
 import os
+import re
 import time
 from concurrent.futures import ThreadPoolExecutor
 from datetime import timedelta
@@ -33,22 +34,25 @@ def _default_threads(num_threads: Optional[int]) -> int:
     return num_threads or (os.cpu_count() or 4) * 4
 
 
+# "... 05:00:00 PST 2025" -> "... 05:00:00 2025" (java.util.Date.toString)
+_ZONE_ABBREVIATION = re.compile(r"(\d\d:\d\d:\d\d)\s+[A-Za-z]+\b")
+
+
 def _created_time_utc_naive(spark, db: str, name: str, rendered: str):
     """The table's creation time as a UTC-NAIVE pandas timestamp — the one
     convention every registry comparand uses (sidecar/warehouse mtimes via
     fs._utc_naive, the eviction cutoff too), so catalog rows stay mutually
-    comparable on non-UTC driver hosts (ADVICE r9 #1).
+    comparable on non-UTC driver hosts.
 
     Primary source: the catalog's epoch-millis ``createTime`` via the JVM
     session catalog — zone-free by construction, no string parsing at all.
 
     Fallback (catalog API unavailable): parse DESCRIBE's rendered 'Created
-    Time'. The rendering is local wall time in the driver JVM's DEFAULT
-    zone, so (a) a tz-aware parse must tz_convert('UTC') BEFORE stripping
-    — bare tz_localize(None) keeps the source wall time; and (b) a naive
-    parse means pandas silently dropped an unrecognized zone abbreviation
-    (e.g. 'PST'), leaving JVM-local wall time — localize it from the JVM's
-    default zone id (full id, so DST resolves correctly), then convert.
+    Time' ("Fri Aug 15 05:00:00 PST 2025"). The rendering is local wall
+    time in the driver JVM's DEFAULT zone, so the zone abbreviation (which
+    pandas cannot resolve) is stripped and the wall time localized from
+    the JVM's default zone id (full id, so DST resolves correctly), then
+    converted. A rendering pandas parses as tz-aware is converted as is.
     """
     try:
         jcat = spark._jsparkSession.sessionState().catalog()
@@ -61,7 +65,8 @@ def _created_time_utc_naive(spark, db: str, name: str, rendered: str):
     except Exception:
         pass
     try:
-        creation_time = pd.to_datetime(rendered)
+        wall = _ZONE_ABBREVIATION.sub(r"\1", rendered.strip())
+        creation_time = pd.to_datetime(wall)
         if getattr(creation_time, "tzinfo", None) is not None:
             return creation_time.tz_convert("UTC").tz_localize(None)
         zone = spark._jvm.java.util.TimeZone.getDefault().getID()
@@ -218,9 +223,9 @@ def _clear_cache_for_hash_locked(
     except Exception as exc:
         log.warning("DROP TABLE %s failed: %s", table, exc)
         # A transient metastore error must NOT cascade into deleting the
-        # data files out from under a still-registered catalog entry
-        # (ADVICE r7 #3): sweep below only if the table verifiably does
-        # not exist. An unanswerable catalog stays conservative (skip).
+        # data files out from under a still-registered catalog entry:
+        # sweep below only if the table verifiably does not exist. An
+        # unanswerable catalog stays conservative (skip).
         try:
             dropped = not spark.catalog.tableExists(table)
         except Exception:
@@ -394,31 +399,22 @@ def find_inconsistent_entries(
 def _entry_inventory_ok(
     spark: SparkSession, hash_name: str, sidecar_dir: Optional[str] = None
 ) -> Optional[bool]:
-    """Does ``hash_name``'s live data listing match its writer-recorded
-    inventory? None when the entry carries no (parseable) record or the
-    table directory is gone (that is the orphan scan's finding, not a
-    corruption finding). False = part files lost or altered AFTER commit
-    — the read path refuses such an entry; the scans below surface it.
-    ``sidecar_dir``: the entry's actual sidecar directory, for entries
-    written under a custom ``cache_path`` (ADVICE r17 #3 — the r17
-    read-path fix made reads refuse corrupt custom-base entries, but the
-    operator scan probed only the default layout, so the cron alert
-    never fired for exactly that class); None = the default
-    SPARK_CACHE_DIR layout."""
-    from .core import _inventory_sidecar_path, _table_location, check_data_inventory
+    """False when ``hash_name``'s data files no longer match its commit
+    record (part files lost or altered after commit — the read path
+    refuses such an entry; the scans below surface it). None when there
+    is nothing to check: the table directory is gone (the orphan scan's
+    finding), the format keeps its own log, or the listing failed.
+    ``sidecar_dir``: the entry's sidecar directory for custom
+    ``cache_path`` bases; None = the default SPARK_CACHE_DIR layout."""
+    from .core import CORRUPT, GONE, TRANSACTIONAL, _probe_entry
 
-    recorded = fs.read_text(_inventory_sidecar_path(hash_name, sidecar_dir))
-    if recorded is None:
-        return None
-    location = _table_location(spark, hash_name)
-    if not fs.exists(location) or fs.exists(f"{location.rstrip('/')}/_delta_log"):
-        return None
     try:
-        return check_data_inventory(location, recorded)
+        state, _ = _probe_entry(spark, hash_name, sidecar_dir)
     except Exception as exc:
         log.warning("Inventory scan failed for %s (%s)", hash_name,
                     exc.__class__.__name__)
         return None
+    return None if state in (GONE, TRANSACTIONAL) else state != CORRUPT
 
 
 def _custom_base_entries(base: str) -> List[tuple]:
@@ -451,8 +447,8 @@ def find_corrupt_entries(
     The default scan walks the SPARK_CACHE_DIR registry. Entries written
     with a custom ``cache_path`` keep their sidecars under that base, so
     they are invisible to the registry walk — pass each such base via
-    ``extra_bases`` to include them (ADVICE r17 #3; the CLI exposes this
-    as repeatable ``--scan-corrupt-base``)."""
+    ``extra_bases`` to include them (the CLI exposes this as repeatable
+    ``--scan-corrupt-base``)."""
     meta = get_cached_dataframe_metadata(num_threads=num_threads)
     pairs: List[tuple] = (
         [(h, None) for h in meta["hash_name"]] if not meta.empty else []
@@ -476,11 +472,21 @@ def _entry_bytes(spark: SparkSession, hash_name: str) -> int:
     directory (the data — partitioned/bucketed tables nest, hence the
     recursive tree size) PLUS the metadata sidecar directory. Either half
     may be absent (orphans); tree_size of a missing path is 0."""
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    db_root = f"{warehouse.rstrip('/')}/{config.CACHE_DATABASE}.db"
-    return fs.tree_size(f"{db_root}/{hash_name}") + fs.tree_size(
+    from .core import _table_location
+
+    return fs.tree_size(_table_location(spark, hash_name)) + fs.tree_size(
         f"{config.SPARK_CACHE_DIR}{hash_name}/"
     )
+
+
+def _entry_bytes_and_state(spark: SparkSession, hash_name: str) -> tuple:
+    """(footprint bytes, probe state) from ONE listing of the entry's data
+    directory — what :func:`cache_stats` needs per entry."""
+    from .core import _probe_entry
+
+    state, listing = _probe_entry(spark, hash_name)
+    sidecar_bytes = fs.tree_size(f"{config.SPARK_CACHE_DIR}{hash_name}/")
+    return listing.total_bytes + sidecar_bytes, state
 
 
 def cache_stats(
@@ -499,23 +505,19 @@ def cache_stats(
     situations these stats diagnose. Parallelized like every other
     registry scan here.
     """
+    from .core import CORRUPT
+
     meta = get_cached_dataframe_metadata(num_threads=num_threads)
     tables = get_cached_tables(spark, num_threads=num_threads)
     meta_hashes = set(meta["hash_name"]) if not meta.empty else set()
     table_hashes = set(tables["hash_name"]) if not tables.empty else set()
-    all_hashes = meta_hashes | table_hashes
+    all_hashes = sorted(meta_hashes | table_hashes)
 
     with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        sizes = dict(
-            zip(all_hashes, pool.map(lambda h: _entry_bytes(spark, h), all_hashes))
+        probed = list(
+            pool.map(lambda h: _entry_bytes_and_state(spark, h), all_hashes)
         )
-        meta_list = sorted(meta_hashes)
-        inventory = dict(
-            zip(
-                meta_list,
-                pool.map(lambda h: _entry_inventory_ok(spark, h), meta_list),
-            )
-        )
+    sizes = [size for size, _ in probed]
 
     times = list(meta["creationTime"]) if not meta.empty else []
     return {
@@ -528,11 +530,11 @@ def cache_stats(
         # Entries whose live data files no longer match the write-time
         # inventory — the read path refuses these as misses; listed here
         # so the operator sees WHY a "cached" query keeps recomputing.
-        "corrupt_entries": sorted(
-            h for h, ok in inventory.items() if ok is False
-        ),
-        "total_cache_bytes": sum(sizes.values()),
-        "largest_entry_bytes": max(sizes.values(), default=0),
+        "corrupt_entries": [
+            h for h, (_, state) in zip(all_hashes, probed) if state == CORRUPT
+        ],
+        "total_cache_bytes": sum(sizes),
+        "largest_entry_bytes": max(sizes, default=0),
         "oldest_entry": min(times, default=None),
         "newest_entry": max(times, default=None),
     }

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 from types import SimpleNamespace
 
 import pandas as pd
@@ -64,25 +65,28 @@ def test_created_time_localizes_dropped_abbreviation_from_jvm_zone():
     raw = pd.to_datetime("Fri Aug 15 05:00:00 PST 2025")
     assert raw.tzinfo is None and raw.hour == 5
 
-    got = _created_time_utc_naive(
-        _stub_spark_jvm_tz("America/Los_Angeles"),
-        "db",
-        "t",
-        "Fri Aug 15 05:00:00 PST 2025",
-    )
+    # the library call itself must not lean on pandas dropping the zone
+    # (deprecated: a future pandas raises there)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = _created_time_utc_naive(
+            _stub_spark_jvm_tz("America/Los_Angeles"),
+            "db",
+            "t",
+            "Fri Aug 15 05:00:00 PST 2025",
+        )
+        # a UTC-rendering host (this repo's pinned sessions) stays a no-op
+        utc = _created_time_utc_naive(
+            _stub_spark_jvm_tz("UTC"), "db", "t", "Fri Aug 15 05:00:00 UTC 2025"
+        )
+        # unparseable renders stay NaT, as before
+        nonsense = _created_time_utc_naive(
+            _stub_spark_jvm_tz("UTC"), "db", "t", "nonsense"
+        )
     # Aug 15 is PDT (UTC-7) in America/Los_Angeles: 05:00 wall -> 12:00 UTC
     assert got == pd.Timestamp("2025-08-15 12:00:00")
-
-    # a UTC-rendering host (this repo's pinned sessions) stays a no-op
-    utc = _created_time_utc_naive(
-        _stub_spark_jvm_tz("UTC"), "db", "t", "Fri Aug 15 05:00:00 UTC 2025"
-    )
     assert utc == pd.Timestamp("2025-08-15 05:00:00")
-
-    # unparseable renders stay NaT, as before
-    assert pd.isna(
-        _created_time_utc_naive(_stub_spark_jvm_tz("UTC"), "db", "t", "nonsense")
-    )
+    assert pd.isna(nonsense)
 
 
 def test_verify_oracle_source_where_is_boundary_safe():

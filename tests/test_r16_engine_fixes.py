@@ -20,8 +20,8 @@
    prefixed the CWD); only genuinely relative scheme-less paths are
    absolutized.
 4. (low) the ``_SUCCESS`` path-fallback guard gates on the WRITER's
-   committer discipline, recorded per-entry at write time
-   (``writer_committer.txt`` beside the metadata sidecar): a
+   committer discipline, recorded per-entry at write time (the
+   ``success_marker`` line of the entry's commit record): a
    marksuccessfuljobs=false READER no longer skips the torn-write guard
    for marker-written directories (the dangerous quadrant), and entries
    written before the record exists keep the reader-conf fallback.
@@ -291,8 +291,8 @@ def test_writer_record_closes_markerless_reader_quadrant(extended):
 
     df = _cached_agg(extended)
     h, loc = _path_only_entry(extended, df)
-    record = core.fs.read_text(core._committer_sidecar_path(h))
-    assert record is not None and record.endswith("true")
+    record = core.fs.read_text(core._inventory_sidecar_path(h))
+    assert record is not None and "success_marker=true" in record
 
     os.remove(f"{loc}/_SUCCESS")  # another process's rewrite in flight
     hconf = extended.sparkContext._jsc.hadoopConfiguration()
@@ -312,14 +312,19 @@ def test_writer_record_closes_markerless_reader_quadrant(extended):
 
 
 def test_pre_recording_entries_fall_back_to_reader_conf(extended):
-    """Entries written before the writer record existed (no
-    writer_committer.txt): the guard keeps the r15 reader-conf gate —
-    behavior for old caches is unchanged."""
+    """Entries written before the writer record existed (a commit record
+    with no success_marker line): the guard keeps the r15 reader-conf
+    gate — behavior for old caches is unchanged."""
     from dbfs_spark_cache_spark import core, read_cache_if_exist
 
     df = _cached_agg(extended)
     h, loc = _path_only_entry(extended, df)
-    os.remove(core._committer_sidecar_path(h).replace("file:", ""))
+    record_path = core._inventory_sidecar_path(h)
+    record = core.fs.read_text(record_path)
+    core.fs.write_text(record_path, "\n".join(
+        line for line in record.splitlines()
+        if not line.startswith("success_marker=")
+    ))
     os.remove(f"{loc}/_SUCCESS")
 
     hconf = extended.sparkContext._jsc.hadoopConfiguration()

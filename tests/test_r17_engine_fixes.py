@@ -1,11 +1,10 @@
 """r17 engine fixes.
 
 1. Custom-``cache_path`` sidecar-guard symmetry (VERDICT r16 "What's
-   wrong" #3 / ADVICE r16 #4): ``_record_writer_committer`` and
-   ``_record_data_inventory`` always wrote their sidecars beside the
-   entry's metadata file — which a custom ``cache_path`` relocates —
-   while ``_writer_marks_success`` and the read-path inventory probe
-   derived their paths from ``config.SPARK_CACHE_DIR`` only. Custom-base
+   wrong" #3 / ADVICE r16 #4): the writer always wrote its committer and
+   inventory records beside the entry's metadata file — which a custom
+   ``cache_path`` relocates — while the read-path probes derived their
+   paths from ``config.SPARK_CACHE_DIR`` only. Custom-base
    entries therefore recorded sidecars that no reader ever read: the
    corrupt-entry guard (r16) and the writer-discipline ``_SUCCESS`` gate
    (r15) were silently inactive for them. The read probes now receive
@@ -63,8 +62,9 @@ def _parts(loc):
 def test_custom_base_sidecars_recorded_beside_custom_metadata(
     extended, tmp_path
 ):
-    """The writer's committer + inventory records land under the custom
-    base (beside the metadata sidecar), not under SPARK_CACHE_DIR."""
+    """The writer's commit record (inventory + marker line) lands under
+    the custom base (beside the metadata sidecar), not under
+    SPARK_CACHE_DIR."""
     from dbfs_spark_cache_spark import core, write_cache
     from dbfs_spark_cache_spark.config import config
 
@@ -73,10 +73,8 @@ def test_custom_base_sidecars_recorded_beside_custom_metadata(
     write_cache(df, cache_path=base)
     h = core.resolve_table_hash(df)
 
-    assert os.path.exists(f"{base}{h}/{core._COMMITTER_SIDECAR}")
     assert os.path.exists(f"{base}{h}/{core._INVENTORY_SIDECAR}")
     default_dir = f"{config.SPARK_CACHE_DIR}{h}"
-    assert not os.path.exists(f"{default_dir}/{core._COMMITTER_SIDECAR}")
     assert not os.path.exists(f"{default_dir}/{core._INVENTORY_SIDECAR}")
 
 
@@ -111,7 +109,7 @@ def test_custom_base_inventory_guard_fires(extended, tmp_path):
 
 def test_custom_base_writer_committer_record_is_read(extended, tmp_path):
     """The sharp pre/post-fix discriminator for the committer half: a
-    custom-base entry whose WRITER recorded marks_success_jobs=false must
+    custom-base entry whose WRITER recorded success_marker=false must
     keep serving through the path fallback with no _SUCCESS marker. The
     pre-fix probe missed the custom-base sidecar and fell back to this
     reader's conf (marker-writing in local tests) — a spurious miss."""
@@ -129,8 +127,9 @@ def test_custom_base_writer_committer_record_is_read(extended, tmp_path):
     # the record, drop the catalog entry (in-memory catalog death — the
     # managed-table files are snapshotted around the DROP, which deletes
     # them), and strip the marker the committer would not have written.
-    fs.write_text(f"{base}{h}/{core._COMMITTER_SIDECAR}",
-                  "marks_success_jobs=false")
+    record_path = f"{base}{h}/{core._INVENTORY_SIDECAR}"
+    fs.write_text(record_path, fs.read_text(record_path).replace(
+        "success_marker=true", "success_marker=false"))
     snapshot = f"{tmp_path}/loc_snapshot"
     shutil.copytree(loc, snapshot)
     extended.sql(f"DROP TABLE IF EXISTS {core.table_name_for_hash(h)}")
