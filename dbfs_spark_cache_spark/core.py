@@ -19,7 +19,7 @@ from __future__ import annotations
 import hashlib
 import logging
 from datetime import datetime
-from typing import Any, List, Mapping, Optional, Tuple, Union
+from typing import Any, Callable, List, Mapping, Optional, Tuple, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +31,7 @@ from .plans.fingerprint import (
     INPUT_LISTING_FAILED_KEY,
     SCHEMA_CHANGED_KEY,
     canonical_plan,
+    existing_entry_hash,
     find_plain_udfs,
     input_dir_mod_datetime,
     plan_is_uncacheable,
@@ -506,6 +507,77 @@ def _table_exists(spark: SparkSession, table: str) -> bool:
         return False
 
 
+_InputInfo = Mapping[str, Union[datetime, bool]]
+
+
+def _admit(
+    df: DataFrame,
+    complexity_threshold: Optional[float] = None,
+    multiplier_threshold: Optional[float] = None,
+    probe: Optional[Callable[[str, _InputInfo], Optional[DataFrame]]] = None,
+) -> Union[DataFrame, Tuple[str, _InputInfo]]:
+    """The admission step of every cache call (``cacheToStorage`` and
+    backup): may ``df`` be written, and is it already a cache entry?
+
+    Returns ``(plan, input_info)`` for an admitted write, else the frame
+    the caller returns as is: ``df``, or ``probe``'s hit. ``probe``
+    (cacheToStorage only) runs before the cost gate, so a hit is served
+    whatever the thresholds say; only probing calls bump the counters.
+    """
+    plan = canonical_plan(df)
+    if plan_is_uncacheable(plan):
+        # No content identity (reference: dataframe_extensions.py:47-49):
+        # two RDD-backed frames with one schema would share a key.
+        log.info("RDD-backed plan; skipping cache")
+        return df
+    # A direct-data frame or a pure scan of a cache table already IS its
+    # entry: writing it again would store a twin of that table under the
+    # metadata-document key (reference: dataframe_extensions.py:54-56).
+    existing = existing_entry_hash(df, plan)
+    if existing is not None:
+        log.info("Frame already is cache entry %s; nothing to cache", existing)
+        return df
+    info = input_dir_mod_datetime(df, plan)
+    if INPUT_LISTING_FAILED_KEY in info or SCHEMA_CHANGED_KEY in info:
+        # Both sentinels carry datetime.now(): the fingerprint is
+        # unmatchable, so writing would create an entry no later
+        # (correct) key ever finds — a full distributed write leaked as
+        # an orphan on EVERY call. Skip caching this run instead.
+        log.warning(
+            "Unmatchable fingerprint (input listing failed or schema "
+            "changed); skipping cache for this run"
+        )
+        return df
+    if probe is not None:
+        hit = probe(plan, info)
+        if hit is not None:
+            log.info("Cache hit; replacing plan with table scan")
+            _bump("hits")
+            return hit
+        _bump("misses")
+    # The cost gate: strict <, and the estimate is computed only when a
+    # threshold above 0 asks for it — nothing else reads it.
+    thresholds = (complexity_threshold or 0, multiplier_threshold or 0)
+    if max(thresholds) > 0:
+        from .complexity import estimate_compute_complexity
+
+        try:
+            estimate = estimate_compute_complexity(df)
+        except Exception as exc:
+            log.warning("Complexity estimation failed: %s", exc_summary(exc))
+            return plan, info
+        for name, value, threshold in zip(
+            ("Complexity", "Multiplier"), estimate, thresholds
+        ):
+            if threshold > 0 and value < threshold:
+                log.info("%s %.2f below threshold %s; not caching",
+                         name, value, threshold)
+                if probe is not None:
+                    _bump("threshold_skips")
+                return df
+    return plan, info
+
+
 def cache_dataframe(
     df: DataFrame,
     override_prefer_spark_cache: bool = False,
@@ -516,80 +588,24 @@ def cache_dataframe(
 ) -> DataFrame:
     """The flagship entry point (``df.cacheToStorage()``).
 
-    Pipeline (reference: dataframe_extensions.py:29-133):
-      plan check -> cache probe -> cost gate -> Spark-cache tier or
-      materialized write. Returns either the original df (skip), the in-memory
-      cached df, or a scan of the materialized table (hit/new write).
+    Pipeline (reference: dataframe_extensions.py:29-133): admission (plan
+    check, entry identity, input listing) -> cache probe -> cost gate ->
+    Spark-cache tier or materialized write; see :func:`_admit`. Returns
+    the original df (skip, or df already is an entry), the in-memory
+    cached df, or a scan of the materialized table (hit/new write).
     """
-    plan = canonical_plan(df)
-    if plan_is_uncacheable(plan):
-        log.info("RDD-backed plan; skipping cache")
-        return df
-
-    # Direct-data caches ARE their own materialization — re-caching would
-    # duplicate content-addressed data (reference: dataframe_extensions.py:54-56).
-    if getattr(df, "_is_direct_data_cache", False):
-        log.info("Direct-data cache source; nothing to cache")
-        return df
-
-    info = input_dir_mod_datetime(df, plan)
-    if INPUT_LISTING_FAILED_KEY in info or SCHEMA_CHANGED_KEY in info:
-        # Both sentinels carry datetime.now(): the fingerprint is
-        # unmatchable, so writing would create an entry no later
-        # (correct) key ever finds — a full distributed write leaked as
-        # an orphan on EVERY call. Skip caching this run instead. (Same
-        # guard as tiering.backup_spark_cached_to_storage.)
-        log.warning(
-            "Unmatchable fingerprint (input listing failed or schema "
-            "changed); skipping cache for this run"
-        )
-        return df
-
-    hit = read_cache_if_exist(
-        df,
-        query_plan=plan,
-        input_info=info,
-        hash_name=kwargs.get("hash_name"),
-        cache_path=kwargs.get("cache_path"),
+    hash_name = kwargs.get("hash_name")
+    cache_path = kwargs.get("cache_path")
+    admitted = _admit(
+        df, complexity_threshold, multiplier_threshold,
+        probe=lambda plan, info: read_cache_if_exist(
+            df, query_plan=plan, input_info=info,
+            hash_name=hash_name, cache_path=cache_path,
+        ),
     )
-    if hit is not None:
-        log.info("Cache hit; replacing plan with table scan")
-        _bump("hits")
-        return hit
-    _bump("misses")
-
-    from .complexity import estimate_compute_complexity
-
-    complexity = multiplier = None
-    try:
-        complexity, multiplier, size_gb = estimate_compute_complexity(df)
-        log.info(
-            "Estimated complexity %.2f (size %.5f GB x multiplier %.2f)",
-            complexity, size_gb, multiplier,
-        )
-    except Exception as exc:  # pragma: no cover - defensive
-        log.warning("Complexity estimation failed: %s", exc)
-
-    if (
-        complexity is not None
-        and complexity_threshold is not None
-        and complexity_threshold > 0
-        and complexity < complexity_threshold
-    ):
-        log.info("Complexity %.2f below threshold %s; not caching", complexity,
-                 complexity_threshold)
-        _bump("threshold_skips")
-        return df
-    if (
-        multiplier is not None
-        and multiplier_threshold is not None
-        and multiplier_threshold > 0
-        and multiplier < multiplier_threshold
-    ):
-        log.info("Multiplier %.2f below threshold %s; not caching", multiplier,
-                 multiplier_threshold)
-        _bump("threshold_skips")
-        return df
+    if isinstance(admitted, DataFrame):
+        return admitted
+    plan, info = admitted
 
     plain_udfs = find_plain_udfs(df)
     if plain_udfs:
@@ -615,15 +631,12 @@ def cache_dataframe(
         _bump("spark_cache")
         return df.cache()
 
-    # The probe above used the full mapping; the write keys off the same
-    # document (the former DIRECT_DATA_CACHE_KEY filter here was dead —
-    # input_dir_mod_datetime never emits that sentinel).
     return write_cache(
         df,
         query_plan=plan,
         input_info=info,
-        hash_name=kwargs.get("hash_name"),
-        cache_path=kwargs.get("cache_path"),
+        hash_name=hash_name,
+        cache_path=cache_path,
         partition_by=kwargs.get("partition_by"),
         bucket_by=kwargs.get("bucket_by"),
         n_buckets=kwargs.get("n_buckets", 16),

@@ -317,8 +317,8 @@ def banded_edit_pairs(
     """All pairs within ``max_dist`` BYTE-level edits sharing
     ``block_col``, blocked by (block, byte-length band). Output columns:
     part_a/part_b (keys), name_a/name_b, edit_dist. The distance is the
-    UTF-8 byte Levenshtein (see ``_bytes_as_latin1`` — r18 contract;
-    identical to code-point distance on ASCII), and banding uses
+    UTF-8 byte Levenshtein (see ``_bytes_as_latin1``; identical to
+    code-point distance on ASCII), and banding uses
     ``octet_length`` because the band-adjacency bound is only sound in
     the same unit as the distance. band_width must exceed max_dist so
     any qualifying pair's band keys differ by at most 1 (the probe side
@@ -337,19 +337,18 @@ def banded_edit_pairs(
     # The byte fold is HOISTED into the row projections — folded once per
     # row (3x on the exploded probe side) instead of once per candidate
     # pair inside the join condition, where it re-ran for every comparison
-    # (measured at sf0.1: per-pair fold 1.22 s vs hoisted 0.99 s vs the
-    # pre-r18 code-point form 0.81 s — the byte-correct semantics are
-    # worth it, BENCH_NOTES "Round-18").
-    # r19 opt (guide §2.3 shuffle fewer bytes; VERDICT r18 next-round
-    # item #5 — the byte contract regressed fn_edit_distance 2.3x on the
-    # driver box): the fold is a BIJECTION (Latin-1 decode of the UTF-8
-    # bytes is total and invertible), so the name column no longer rides
-    # the join at all — both sides carry ONLY the fold plus a precomputed
-    # byte-length int, and the few surviving pairs recover the original
-    # names post-join via encode(fold,'ISO-8859-1') -> decode(.,'UTF-8').
-    # That halves each side's string payload through the repartition and
-    # the broadcast build, and the per-pair length guard compares two
-    # precomputed ints instead of re-running octet_length per candidate.
+    # (measured at sf0.1: per-pair fold 1.22 s vs hoisted 0.99 s).
+    # The fold is a BIJECTION (Latin-1 decode of the UTF-8 bytes is total
+    # and invertible), so the name column does not ride the join at all —
+    # both sides carry ONLY the fold plus a precomputed byte-length int,
+    # and the few surviving pairs recover the original names post-join
+    # via encode(fold,'ISO-8859-1') -> decode(.,'UTF-8'). That halves each
+    # side's string payload through the repartition and the broadcast
+    # build, and the per-pair length guard compares two precomputed ints
+    # instead of re-running octet_length per candidate.
+    # A NULL name has no distance and never pairs; filtering it up front
+    # also pushes IsNotNull(name) into the scan.
+    df = df.where(F.col(name_col).isNotNull())
     blen = F.octet_length(name_col)
     a = df.select(
         F.col(key_col).alias("part_a"),

@@ -35,7 +35,6 @@ log = logging.getLogger(__name__)
 
 # Sentinel keys used in the input-fingerprint mapping.
 SCHEMA_CHANGED_KEY = "<schema_changed_placeholder>"
-DIRECT_DATA_CACHE_KEY = "<direct_data_cache>"
 # inputFiles() failed for a reason OTHER than schema change (transient
 # metastore/FS error). The fingerprint must become unmatchable — degrading
 # to a plan-only key would both WRITE an entry that later (correct) keys
@@ -394,39 +393,28 @@ def _is_pure_scan_of(plan: str, db: str, table: str) -> bool:
     return not re.search(r"[A-Z]", remainder)
 
 
-def resolve_table_hash(df: DataFrame) -> str:
-    """Full identity resolution with the reference's short-circuits
-    (reference: core_caching.py:527-571):
-
-    1. DataFrame tagged as a direct-data cache -> its recorded ``data_*`` hash.
-    2. Plan that is a *pure scan* of a ``data_*`` cache table -> that hash.
-    3. Plan that embeds a standard 32-hex cache table -> that hash.
-    4. Otherwise MD5 of the metadata document.
-    """
+def existing_entry_hash(df: DataFrame, plan: str) -> Optional[str]:
+    """The cache entry ``df`` already is, or None: a direct-data frame's
+    tagged ``data_*`` hash, or the table a *pure scan* reads (``data_*``
+    or standard). A derived frame over a cached scan is no entry — else
+    clearing it would drop the parent's cache (the reference returns the
+    embedded hash for any referencing plan, core_caching.py:527-571)."""
     if getattr(df, "_is_direct_data_cache", False):
         tagged = getattr(df, "_direct_data_cache_hash", None)
         if tagged:
             return tagged
-
-    plan = canonical_plan(df)
     db = config.CACHE_DATABASE
+    for prefix in ("data_", ""):
+        table = find_cache_table_in_text(plan, db, prefix)
+        if table is not None and _is_pure_scan_of(plan, db, table):
+            return table
+    return None
 
-    data_table = find_cache_table_in_text(plan, db, "data_")
-    if data_table and _is_pure_scan_of(plan, db, data_table):
-        return data_table
 
-    # A standard cache table embedded in the plan short-circuits ONLY for a
-    # pure scan — a derived frame (filter/join on top of a cached scan) must
-    # get its own identity, otherwise clearing the derived frame would drop
-    # the parent's cache. (The reference returns the embedded hash for any
-    # referencing plan — a footgun deliberately not reproduced.)
-    embedded = find_cache_table_in_text(plan, db, "")
-    if embedded is not None and _is_pure_scan_of(plan, db, embedded):
-        return embedded
-
-    info = input_dir_mod_datetime(df, plan)
-    # Datetimes AND cached-input path markers both participate in the key
-    # (must match write_cache exactly; input_dir_mod_datetime never emits
-    # the direct-data sentinel, so no filtering is needed here).
-    metadata_txt = cache_metadata_document(info, plan)
-    return compute_cache_key(metadata_txt)
+def resolve_table_hash(df: DataFrame) -> str:
+    """The entry ``df`` already is (:func:`existing_entry_hash`), else the
+    MD5 of its metadata document — the key ``write_cache`` would use."""
+    plan = canonical_plan(df)
+    return existing_entry_hash(df, plan) or compute_cache_key(
+        cache_metadata_document(input_dir_mod_datetime(df, plan), plan)
+    )

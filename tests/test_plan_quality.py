@@ -181,6 +181,14 @@ def test_edit_distance_blocking_is_composite(spark, queries):
     )
 
 
+def test_edit_distance_pushes_name_not_null_to_scan(spark, queries):
+    """A NULL p_name never pairs, so banded_edit_pairs filters it before
+    the projections and the part scan skips such rows itself."""
+    plan = plan_text(queries["fn_edit_distance"](spark, SF_ORACLE))
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert pushed and all("IsNotNull(p_name)" in p for p in pushed), pushed
+
+
 def test_flagship_no_forced_broadcast_on_growing_dim(spark, queries):
     """flagship_wide may hint-broadcast only the BOUNDED dim (nation, 25
     rows at every SF). The customer leg grows with the corpus (~GBs at
